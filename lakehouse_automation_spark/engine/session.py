@@ -92,13 +92,18 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.csv.parser.columnPruning.enabled": "true",
     # Keep whole-stage-codegen methods under HotSpot's 8 KB JIT cutoff.
     # Wide unrolled expressions (64-dim dot products, operators/vector)
-    # fuse into ~30 KB megamethods that HotSpot refuses to JIT — every
-    # FRESH query then pays multi-second interpretation (or C2 compile
-    # with -XX:-DontCompileHugeMethods, equally slow per new generated
-    # class). Above this limit Spark falls back to per-operator codegen:
-    # small, JIT-able, still compiled — measured 7 s -> 1.5 s per fresh
-    # vector-pipeline query with identical results, and the fall-back
-    # only triggers on stages whose fused method couldn't JIT anyway.
+    # fuse into ~30 KB megamethods that HotSpot refuses to JIT — the
+    # first run of such a plan in a session then pays multi-second
+    # interpretation (or C2 compile with -XX:-DontCompileHugeMethods,
+    # equally slow per new generated class). Above this limit Spark
+    # falls back to per-operator codegen: small, JIT-able, still
+    # compiled — measured 7 s -> 1.5 s per cold vector-pipeline query
+    # with identical results, and the fall-back only triggers on stages
+    # whose fused method couldn't JIT anyway. With the codegen cache
+    # sized in get_spark, a later run of the same plan reuses the
+    # compiled (and by then JIT-ed) class, so this cost is paid once
+    # per session, not once per op. 65535 without
+    # -XX:-DontCompileHugeMethods is slower (vec_knn_join > 10 s).
     "spark.sql.codegen.hugeMethodLimit": "8000",
 }
 
@@ -171,6 +176,18 @@ def delta_available() -> bool:
 
 _delta_logged = False
 
+CODEGEN_CACHE_ENTRIES = 1024
+DRIVER_MEM_CAP_MB = 48 * 1024
+
+
+def default_driver_mem() -> str:
+    """Driver heap when $SPARK_DRIVER_MEM is unset: 48g, capped at half
+    of physical RAM so the local JVM (the only process in local mode)
+    cannot be sized past the host and OOM-killed."""
+    ram_mb = (os.sysconf("SC_PAGE_SIZE")
+              * os.sysconf("SC_PHYS_PAGES")) // (1024 * 1024)
+    return f"{min(DRIVER_MEM_CAP_MB, ram_mb // 2)}m"
+
 
 def get_spark(app_name: str = "lakehouse_automation_spark",
               cpus: int | str | None = None) -> SparkSession:
@@ -187,9 +204,22 @@ def get_spark(app_name: str = "lakehouse_automation_spark",
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(n))
         .config("spark.default.parallelism", str(n))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or default_driver_mem())
         .config("spark.driver.maxResultSize", "8g")
         .config("spark.ui.enabled", "false")
+        # Generated classes are cached by source text; Spark's default
+        # holds 100. One cold curation pass (text_exact_dedup,
+        # curate_pipeline, vec_knn_join, vec_ivf_index_refresh,
+        # mm_decode_features, graph_components at sf0.1) compiles ~272
+        # classes, so with 100 slots every later pass evicted its own
+        # code and recompiled 226-251 of them: Janino time on the
+        # driver plus cold, not-yet-JIT-ed classes in the executors.
+        # With 1024 slots (~3.7 cold passes) a later pass compiles 0,
+        # provided no operator bakes a process-global id into its code
+        # (see the convergence probe in operators/dedup.neardup_clusters).
+        # Static conf: it must be set here, RUNTIME_CONFS cannot carry it.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # managed tables (bucketed join copies, ANALYZE stats copies)
         # land under the process-keyed scratch, not a shared cwd

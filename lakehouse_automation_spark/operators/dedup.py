@@ -410,20 +410,24 @@ def neardup_clusters(pairs: DataFrame, max_iters: int = 20,
             )
         # truncate lineage each round (labels otherwise stack joins
         # per iteration) and materialize once for BOTH the convergence
-        # count and the next round. The limit(1).count() below is a
-        # second (cheap: reads local checkpoint blocks) job per round;
-        # folding the changed-flag into the checkpoint job via an
-        # accumulator would halve the job count — kept as-is because
-        # accumulator values are only exact on the FIRST computation
-        # of each partition, and a re-executed stage would double-count
-        # into the convergence flag.
+        # probe and the next round. The isEmpty() below is a second
+        # (cheap: reads local checkpoint blocks) job per round; folding
+        # the changed-flag into the checkpoint job via an accumulator
+        # would halve the job count — kept as-is because accumulator
+        # values are only exact on the FIRST computation of each
+        # partition, and a re-executed stage would double-count into
+        # the convergence flag. isEmpty() plans a top-level limit
+        # (CollectLimit, no codegen). A nested limit such as
+        # filter().limit(1).count() would name its generated counter
+        # from a process-global id, so every round would compile a
+        # class that no codegen cache can hit.
         from .plancapture import capture_plan
         new_labels = capture_plan(
             "connected_components:loop_body",
             new_labels).localCheckpoint(eager=True)
-        changed = new_labels.filter(F.col("_changed")).limit(1).count()
+        converged = new_labels.filter(F.col("_changed")).isEmpty()
         labels = new_labels.select("node", "label")
-        if changed == 0:
+        if converged:
             break
     else:
         raise RuntimeError(
